@@ -4,13 +4,14 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 
-import graft.plans.{DotExpr, NormExpr, SrpSignExpr}
+import graft.plans.{DotExpr, NearestExpr, NormExpr, SrpSignExpr}
 
 /** SparkSessionExtensions entry point (SURVEY §4.2 extension ladder):
   * registers the native vector expressions in the SQL FUNCTION
   * REGISTRY, so plain `spark.sql` users get the whole-stage-codegen'd
-  * kernels — `vec_dot(a, b)`, `vec_norm(a)`, `srp_sign(v, bits)` —
-  * without touching the Scala DSL. Activate with
+  * kernels — `vec_dot(a, b)`, `vec_norm(a)`, `srp_sign(v, bits)`,
+  * `vec_nearest(v, vnorm, cids, cvecs, cnorms, k, digits)` — without
+  * touching the Scala DSL. Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` (already
   * set by graft.Verify / graft.Bench / the test harness).
   */
@@ -28,6 +29,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => {
         require(args.size == 1, "vec_norm(a) takes one array<double>")
         NormExpr(args.head)
+      }))
+    ext.injectFunction((FunctionIdentifier("vec_nearest"),
+      new ExpressionInfo(classOf[NearestExpr].getName, "vec_nearest"),
+      (args: Seq[Expression]) => {
+        require(args.size == 7 && args.drop(5).forall(_.foldable),
+          "vec_nearest(v, vnorm, cids, cvecs, cnorms, k, digits) takes a " +
+            "literal k and a literal digits (NULL: unrounded)")
+        val digits = Option(args(6).eval()).map(_.asInstanceOf[Number].intValue())
+        NearestExpr(args(0), args(1), args(2), args(3), args(4),
+          args(5).eval().asInstanceOf[Number].intValue(), digits)
       }))
     ext.injectFunction((FunctionIdentifier("srp_sign"),
       new ExpressionInfo(classOf[SrpSignExpr].getName, "srp_sign"),

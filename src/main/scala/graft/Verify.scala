@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -76,21 +77,21 @@ object Verify {
       // never fail the dump — record it as its own finding instead).
       if (audit != null) {
         try audit ++= graft.plans.PlanAudit.audit(df).map(name -> _)
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           audit += name -> graft.plans.PlanAudit.Finding(
             "warn", "audit-failed", String.valueOf(e.getMessage).take(200))
         }
       }
       None
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         val msg = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}"
         System.err.println(s"[verify] $name failed: $msg")
         try {
           import spark.implicits._
           Seq(msg).toDF("__error").coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
-        } catch { case _: Throwable => () }
+        } catch { case NonFatal(_) => () }
         Some(name -> msg)
     } finally spark.catalog.clearCache()
   }

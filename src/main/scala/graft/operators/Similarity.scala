@@ -1,8 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+
+import graft.plans.{NormExpr, VectorExprs}
 
 /** Vector similarity search over an embedding column (SURVEY.md §2.11).
   *
@@ -71,30 +78,30 @@ object Similarity {
     *
     * Build: `nlist` centroids are the corpus vectors with the smallest
     * xxhash64(id) — a deterministic uniform sample, no training step,
-    * no stored model, identical on every executor. Every corpus vector
-    * joins the broadcast centroid set and keeps its nearest (window
-    * argmax partitioned by the vector id — high-cardinality key, no
-    * funnel). Search: each query probes its `nprobe` nearest centroids
-    * and re-ranks exactly inside those inverted lists only.
+    * no stored model, identical on every executor — collected to the
+    * driver once. Every corpus vector keeps its nearest centroid (the
+    * vec_nearest kernel, map-side). Search: each query probes its
+    * `nprobe` nearest centroids and re-ranks exactly inside those
+    * inverted lists only.
     *
-    * At 100 TB: assignment is one broadcast join + one
-    * high-cardinality shuffle (in a real index the inverted lists are
-    * written once and reused across query batches); at search time the
-    * corpus is never shuffled — the (tiny) query probe set broadcasts
-    * onto the assignment, and a query touches ~nprobe/nlist of the
-    * corpus. nprobe == nlist degrades gracefully to exact brute force
-    * (spec-pinned).
+    * At 100 TB: assignment is one map-side pass over the corpus against
+    * the broadcast centroid table (in a real index the inverted lists
+    * are written once and reused across query batches); at search time
+    * the corpus is never shuffled — the (tiny) query probe set
+    * broadcasts onto the assignment, and a query touches ~nprobe/nlist
+    * of the corpus. nprobe == nlist degrades gracefully to exact brute
+    * force (spec-pinned). `idCol` must be a key (unique, non-null).
     *
     * SIZING (the knobs are corpus-scale parameters, not constants):
     * nlist ≈ √N — balances list length (N/nlist rows re-ranked per
     * probe) against centroid-scan cost (nlist comparisons per query),
     * the standard IVF rule. The fixture default 32 ≈ √(500·2); at 1 B
-    * vectors use nlist ≈ 32k and keep the centroid set broadcastable
+    * vectors use nlist ≈ 32k and keep the centroid table broadcastable
     * (32k × dim doubles ≈ a few hundred MB at dim 768 — shard the
-    * centroid join when past that). Recall is governed by
-    * nprobe/nlist, NOT by nlist itself — hold the ratio as nlist grows
-    * with the corpus (spec-pinned: growing nlist at fixed ratio keeps
-    * recall), and raise nprobe when recall matters more than latency.
+    * table when past that). Recall is governed by nprobe/nlist, NOT by
+    * nlist itself — hold the ratio as nlist grows with the corpus
+    * (spec-pinned: growing nlist at fixed ratio keeps recall), and
+    * raise nprobe when recall matters more than latency.
     *
     * DEFAULT nprobe ≈ nlist/16 (6% probe fraction — ScaleBench's
     * standing rule), now with measured evidence (graft.tools.IvfRecall,
@@ -112,161 +119,161 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nlist: Int = 32, nprobe: Int = 4): DataFrame = {
+    require(nlist > 0, "ivfTopK needs nlist >= 1")
     val c = corpus.select(
       col(idCol).as("nid"), col(vecCol).cast("array<double>").as("nvec"))
-      .withColumn("nnorm", norm(col("nvec")))
-    val cents = c.select(col("nid").as("cid"), col("nvec").as("cvec"),
-        col("nnorm").as("cnorm"))
-      .orderBy(xxhash64(col("cid")), col("cid"))
-      .limit(nlist)
+    val cents = c.orderBy(xxhash64(col("nid")), col("nid")).limit(nlist)
+      .select(col("nid").cast("long"), col("nvec"))
+      .collect().toIndexedSeq.map(r => (r.getLong(0), vecOf(r, 1)))
     ivfSearch(c, cents, queries, idCol, vecCol, k, nprobe)
   }
 
   /** kmeans-TRAINED centroids for IVF — the learned-centroid build a
     * real ANN serving index runs, replacing ivfTopK's sampled anchors.
-    * Init = the `nlist` lowest-id corpus vectors re-keyed to dense
-    * cids 0..nlist−1 (a bounded rank window, SQL-expressible), then
-    * `rounds` Lloyd iterations: assign every vector to its
-    * argmax-rounded-cosine centroid (ties to the smallest cid — the
-    * same slim max(struct) aggregate as assignment everywhere else in
-    * this file), recompute each centroid as the per-dimension MEAN of
-    * its members ROUNDED to 6 decimals (the pqTrainEncode oracle
-    * technique: rounding makes the trained model engine-independent,
-    * so DuckDB re-derives the identical centroid table via one CTE
-    * pair per round), and keep the previous centroid for a cluster
-    * that lost all members (LEFT JOIN + coalesce — also
-    * SQL-expressible). Each round's table is nlist rows,
-    * localCheckpoint'd so round r reads materialized state, not an
-    * r-deep lineage chain (the BPE-trainer lesson, BASELINE.md r8).
+    * Init = the `nlist` lowest-id corpus vectors keyed to dense cids
+    * 0..nlist−1, then `rounds` Lloyd iterations: assign every vector
+    * to its argmax-rounded-cosine centroid (ties to the smallest cid),
+    * recompute each centroid as the per-dimension MEAN of its members
+    * ROUNDED to 6 decimals (the pqTrainEncode oracle technique:
+    * rounding makes the trained model engine-independent, so DuckDB
+    * re-derives the identical centroid table via one CTE pair per
+    * round), and keep the previous centroid for a cluster that lost
+    * all members (the oracle's LEFT JOIN + coalesce). The table lives
+    * on the driver between rounds; the result is a local relation of
+    * (cid, cvec).
     *
-    * At 100 TB: each round is one broadcast join + two slim
-    * aggregates over (id, cid, cs) / (cid, i, x) rows — the corpus is
-    * scanned `rounds`+1 times and never shuffled wide; training is a
-    * build-time step whose output (nlist × dim doubles) is the
-    * reusable index artifact. */
+    * At 100 TB: each round is one corpus scan plus one slim
+    * (cid, i) aggregate — the vec_nearest kernel assigns map-side
+    * against the broadcast table, posexplode + partial aggregation
+    * collapse each partition to ≤ nlist × dim rows before the
+    * exchange, and the ≤ nlist × dim means are collected. The
+    * centroid table on the driver is the same bytes the broadcast
+    * already ships; training is a build-time step whose output is the
+    * reusable index artifact. `idCol` must be a key (unique, non-null):
+    * assignment is per row, which equals a per-id argmax only when ids
+    * do not repeat. */
   def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, rounds: Int): DataFrame = {
-    val v = corpus.select(
-      col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", norm(col("v")))
-    var cents = v.orderBy("vec_id").limit(nlist)
-      .withColumn("cid",
-        (row_number().over(Window.orderBy("vec_id")) - 1).cast("long"))
-      .select(col("cid"), col("v").as("cvec"))
-      .localCheckpoint()
-    (1 to rounds).foreach { _ =>
-      // limit(nlist) is a no-op row-wise (the table IS nlist rows by
-      // construction) but re-attaches the structural bound the
-      // localCheckpoint erased, so PlanAudit can prove the broadcast
-      // side of every Lloyd-round assignment join is ≤ nlist rows.
-      val cn = cents.limit(nlist).withColumn("cnorm", norm(col("cvec")))
-      val asg = v.crossJoin(broadcast(cn))
-        .select(col("vec_id"),
-          round(cosine(col("v"), col("cvec"), col("nrm"), col("cnorm")), 6)
-            .as("cs"),
-          col("cid"))
-        .groupBy("vec_id")
-        .agg(max(struct(col("cs"), (-col("cid")).as("ncid"))).as("b"))
-        .select(col("vec_id"), (-col("b.ncid")).as("cid"))
-      val means = v.join(asg, Seq("vec_id"))
-        .select(col("cid"), posexplode(col("v")).as(Seq("i", "x")))
-        .groupBy("cid", "i")
-        .agg(round(avg("x"), 6).as("cx"))
-        .groupBy("cid")
-        .agg(expr("transform(array_sort(collect_list(" +
-          "named_struct('i', i, 'x', cx))), s2 -> s2.x)").as("cnew"))
-      cents = cents.join(means, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("cnew"), col("cvec")).as("cvec"))
-        .localCheckpoint()
-    }
-    // same no-op limit on the returned table: downstream ivfSearch
-    // broadcasts it twice (assignment + probes), and the checkpoint
-    // stripped the init limit's proof
-    cents.limit(nlist)
+    val spark = corpus.sparkSession
+    val rows = kmeansTrain(corpus, idCol, vecCol, nlist, rounds)
+      .map { case (cid, v) => Row(cid, v) }
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("cid", LongType, nullable = false),
+      StructField("cvec", ArrayType(DoubleType)))))
   }
 
   /** Final cluster assignment against kmeans-trained centroids —
     * (id, cluster). The corpus-organization primitive topic
-    * attribution builds on: same slim map-side-combinable argmax
-    * aggregate as every Lloyd round (never a window over wide rows),
-    * one broadcast of the ≤ nlist centroid table. */
+    * attribution builds on: one map-side kernel pass against the
+    * broadcast ≤ nlist centroid table, no shuffle. */
   def kmeansAssignments(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int, rounds: Int): DataFrame = {
-    val v = corpus.select(
-      col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("nrm", norm(col("v")))
-    val cn = kmeansCentroids(corpus, idCol, vecCol, nlist, rounds)
-      .limit(nlist).withColumn("cnorm", norm(col("cvec")))
-    v.crossJoin(broadcast(cn))
-      .select(col("vec_id"),
-        round(cosine(col("v"), col("cvec"), col("nrm"), col("cnorm")), 6)
-          .as("cs"),
-        col("cid"))
-      .groupBy("vec_id")
-      .agg(max(struct(col("cs"), (-col("cid")).as("ncid"))).as("b"))
-      .select(col("vec_id").as("id"), (-col("b.ncid")).as("cluster"))
+    val tbl = centroidTable(corpus.sparkSession,
+      kmeansTrain(corpus, idCol, vecCol, nlist, rounds))
+    corpus.select(col(idCol).as("id"),
+      col(vecCol).cast("array<double>").as("v"))
+      .select(col("id"),
+        nearestCids(col("v"), norm(col("v")), tbl, 1, Some(6))
+          .getItem(0).as("cluster"))
   }
 
-  /** IVF search over kmeans-trained centroids — same probe/re-rank
-    * plan as ivfTopK, with the learned centroid table in place of the
-    * sampled anchors. */
+  /** IVF search over kmeans-trained centroids — the same search as
+    * ivfTopK, with the learned centroid table in place of the sampled
+    * anchors. */
   def ivfTopKTrained(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nlist: Int = 32, nprobe: Int = 4, rounds: Int = 3): DataFrame = {
     val c = corpus.select(
       col(idCol).as("nid"), col(vecCol).cast("array<double>").as("nvec"))
-      .withColumn("nnorm", norm(col("nvec")))
-    val cents = kmeansCentroids(corpus, idCol, vecCol, nlist, rounds)
-      .select(col("cid"), col("cvec"), norm(col("cvec")).as("cnorm"))
-    ivfSearch(c, cents, queries, idCol, vecCol, k, nprobe)
+    ivfSearch(c, kmeansTrain(corpus, idCol, vecCol, nlist, rounds),
+      queries, idCol, vecCol, k, nprobe)
   }
 
-  /** The IVF probe/assign/re-rank plan shared by the sampled-anchor
-    * and kmeans-trained builds. `c` = (nid, nvec, nnorm) corpus;
-    * `cents` = (cid, cvec, cnorm) centroid table (broadcast-sized by
-    * the nlist contract). */
+  /** A centroid table held on the driver: (cid, vector) with the
+    * vector as collected — null, or a Seq whose elements may be null. */
+  private type Centroids = IndexedSeq[(Long, Seq[Any])]
+
+  private def vecOf(r: Row, i: Int): Seq[Any] =
+    if (r.isNullAt(i)) null else r.getSeq[Any](i)
+
+  /** The Lloyd loop behind kmeansCentroids: one collect for the init,
+    * then one query per round (kernel cid → posexplode → per-(cid, i)
+    * rounded mean → collect). */
+  private def kmeansTrain(corpus: DataFrame, idCol: String, vecCol: String,
+      nlist: Int, rounds: Int): Centroids = {
+    require(nlist > 0, "k-means needs nlist >= 1")
+    val v = corpus.select(
+      col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
+    var cents: Centroids = v.orderBy("vec_id").limit(nlist).select("v")
+      .collect().toIndexedSeq.zipWithIndex
+      .map { case (r, i) => (i.toLong, vecOf(r, 0)) }
+    (1 to rounds).foreach { _ =>
+      val tbl = centroidTable(corpus.sparkSession, cents)
+      // the cid is projected below the posexplode: in one select it
+      // would be re-scored once per exploded element
+      val means = v
+        .select(col("v"), nearestCids(col("v"), norm(col("v")), tbl, 1, Some(6))
+          .getItem(0).as("cid"))
+        .select(col("cid"), posexplode(col("v")).as(Seq("i", "x")))
+        .groupBy("cid", "i")
+        .agg(round(avg("x"), 6).as("cx"))
+        .collect()
+        .groupBy(_.getLong(0))
+        .map { case (cid, rs) =>
+          cid -> rs.sortBy(_.getInt(1)).map(r => r.get(2)).toSeq }
+      cents = cents.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
+    }
+    cents
+  }
+
+  private val CentroidTableType = StructType(Seq(
+    StructField("cids", ArrayType(LongType, containsNull = false)),
+    StructField("cvecs", ArrayType(ArrayType(DoubleType))),
+    StructField("cnorms", ArrayType(DoubleType))))
+
+  /** The centroid table as one broadcast row (cids, cvecs, cnorms),
+    * the norms computed here with NormExpr's fold. */
+  private def centroidTable(spark: SparkSession, cents: Centroids): Column = {
+    val cvecs = cents.map { case (_, v) =>
+      if (v == null) null else new GenericArrayData(v.toArray) }
+    val cnorms = cvecs.map(a => if (a == null) null else NormExpr.of(a))
+    VectorExprs.broadcastRow(spark, CentroidTableType, InternalRow(
+      ArrayData.toArrayData(cents.map(_._1).toArray),
+      new GenericArrayData(cvecs.toArray[Any]),
+      new GenericArrayData(cnorms.toArray[Any])))
+  }
+
+  private def nearestCids(v: Column, vnorm: Column, tbl: Column, k: Int,
+      digits: Option[Int]): Column =
+    VectorExprs.nearest(v, vnorm, tbl.getField("cids"), tbl.getField("cvecs"),
+      tbl.getField("cnorms"), k, digits)
+
+  /** The IVF assign/probe/re-rank plan shared by the sampled-anchor and
+    * kmeans-trained builds. `c` = (nid, nvec) corpus; `cents` = the
+    * driver-held centroid table.
+    *
+    * At 100 TB: assignment (k = 1) and probes (k = nprobe) are
+    * vec_nearest columns over the unrounded cosine, computed in the
+    * corpus and query scans against one broadcast row — the same
+    * ≤ nlist × dim doubles the driver collected. There is no N×nlist
+    * score stream, no argmax shuffle and no rejoin of the vectors
+    * (at 200k × 447 centroids, dim 64, a window over the joined
+    * vectors took 292 s and a slim argmax aggregate ~8 s). Only the
+    * probed candidates reach the re-rank's exchange. `idCol` must be a
+    * key (unique, non-null). */
   private def ivfSearch(
-      c: DataFrame, cents: DataFrame, queries: DataFrame,
+      c: DataFrame, cents: Centroids, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int): DataFrame = {
-    // Assignment argmax as a map-side-combinable AGGREGATE over SLIM
-    // rows, never a window over wide ones: the N×nlist score stream
-    // carries only (nid, cid, csim) — max(struct(csim, -cid)) picks
-    // the same centroid a (csim DESC NULLS LAST, cid ASC) row_number
-    // would (struct ordering is field-by-field, nulls first, so a null
-    // csim loses to any real score and ties break to the smallest
-    // cid) — and partial aggregation collapses each input partition to
-    // ≤N rows BEFORE the exchange. The vectors rejoin by id afterward.
-    // Measured at 200k × 447 centroids (dim 64): the wide-row window
-    // variant shuffled the vectors N×nlist times and took 292 s; this
-    // shape assigns the same corpus in ~8 s. At 100 TB assignment is
-    // the build step — written once, reused across query batches.
-    val assignedSlim = c.crossJoin(broadcast(cents))
-      .select(col("nid"), col("cid"),
-        cosine(col("nvec"), col("cvec"), col("nnorm"), col("cnorm"))
-          .as("csim"))
-      .groupBy("nid")
-      .agg(max(struct(col("csim"), (-col("cid")).as("negcid"))).as("m"))
-      .select(col("nid"), (-col("m.negcid")).as("cid"))
-    val assigned = assignedSlim.join(c, Seq("nid"))
-      .select(col("cid"), col("nid"), col("nvec"), col("nnorm"))
-    val q = queries.select(
+    val tbl = centroidTable(c.sparkSession, cents)
+    val assigned = c.withColumn("nnorm", norm(col("nvec")))
+      .withColumn("cid",
+        nearestCids(col("nvec"), col("nnorm"), tbl, 1, None).getItem(0))
+    val probes = queries.select(
       col(idCol).as("qid"), col(vecCol).cast("array<double>").as("qvec"))
       .withColumn("qnorm", norm(col("qvec")))
-    // Probe top-nprobe needs ranked survivors, so it keeps a window —
-    // but over slim (qid, cid, csim) rows (|Q|×nlist of them, the
-    // query side is the small side by contract); qvec rejoins by qid.
-    val wProbe = Window.partitionBy("qid")
-      .orderBy(desc_nulls_last("csim"), asc("cid"))
-    val probes = q.crossJoin(broadcast(cents))
-      .select(col("qid"), col("cid"),
-        cosine(col("qvec"), col("cvec"), col("qnorm"), col("cnorm"))
-          .as("csim"))
-      .withColumn("crk", row_number().over(wProbe))
-      .filter(col("crk") <= nprobe)
-      .select(col("cid"), col("qid"))
-      .join(q, Seq("qid"))
-      .select(col("cid"), col("qid"), col("qvec"), col("qnorm"))
+      .withColumn("cid", explode(
+        nearestCids(col("qvec"), col("qnorm"), tbl, nprobe, None)))
     val scored = assigned.join(broadcast(probes), Seq("cid"))
       .filter(col("qid") =!= col("nid"))
       .withColumn("sim",

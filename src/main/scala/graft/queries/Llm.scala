@@ -8573,8 +8573,9 @@ SELECT * FROM ($out) ORDER BY rank"""
       round(Similarity.cosine(col(vec), col("ce"), col(nrm), col("cnrm")), 6)
     // assignment argmax as the slim max(struct) aggregate (scores
     // projected inside the broadcast join; vectors rejoin by id) —
-    // the same shape as Similarity.ivfTopK/semdedup, so the
-    // declared oracle op and the scale path share one plan story
+    // the same shape as Similarity.semdedup; the scale path
+    // (Similarity.ivfTopK) assigns with the vec_nearest kernel, which
+    // ranks in this aggregate's order
     val bestA = v.crossJoin(broadcast(cents))
       .select(col("vec_id"), centSim("e", "nrm").as("cs"), col("cid"))
       .groupBy("vec_id")

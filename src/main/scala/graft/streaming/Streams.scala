@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** SURVEY.md §2.9 — Structured Streaming over the events table.
   *
@@ -246,7 +247,7 @@ object Streams {
     try spark.streams.resetTerminated()
     catch { case _: Exception => () }
     try org.apache.spark.sql.graftshim.StateStoreShim.unloadAll()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
   }
 
   /** Stream-stream interval join: clicks joined to the views the same

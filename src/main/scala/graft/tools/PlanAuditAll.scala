@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import graft.plans.PlanAudit
+import scala.util.control.NonFatal
 
 /** Self-audit: run PlanAudit over every declared query and print the
   * findings — the library applying its own 100 TB preflight to its
@@ -35,7 +36,7 @@ object PlanAuditAll {
             println(s"$name ${f.render}")
           }
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             println(s"$name [error] audit-failed: ${e.getMessage}")
             nErr += 1
         }

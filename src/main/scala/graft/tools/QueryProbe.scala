@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Times declared queries at a given SF dir — dev utility for iterating
   * on query plans without a full Bench run. Mirrors Bench's session
@@ -76,7 +77,7 @@ object QueryProbe {
     if (sys.env.contains("QP_WARM")) {
       val warmDir = "/root/testdata/sf0.001"
       graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try force(fn(spark, warmDir)) catch { case _: Throwable => () }
+        try force(fn(spark, warmDir)) catch { case NonFatal(_) => () }
       }
       spark.catalog.clearCache()
     }

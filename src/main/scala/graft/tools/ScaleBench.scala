@@ -358,9 +358,11 @@ object ScaleBench {
       })
     }
     // Cluster topics (round 12): kmeans assignment of the full
-    // embedding corpus (the slim argmax aggregate — the 292s-vs-8s
-    // lesson baked into kmeansAssignments) + token join + per-cluster
-    // top-k. The window sees only the (cluster, word) counts.
+    // embedding corpus + token join + per-cluster top-k. Each Lloyd
+    // round is one corpus scan plus one slim (cid, i) aggregate; the
+    // final assignment is one map-side vec_nearest pass against the
+    // broadcast centroid table (the same bytes the driver collected),
+    // no shuffle. The window sees only the (cluster, word) counts.
     if (only.isEmpty || only.exists("cluster_topics".contains)) {
       import graft.operators.Similarity
       import org.apache.spark.sql.expressions.Window
@@ -1043,10 +1045,11 @@ object ScaleBench {
       Similarity.ivfTopK(emb, queries, "vec_id", "embedding", 10,
         nlist = nlist, nprobe = math.max(1, nlist / 16))))
     // kmeans-TRAINED IVF (round 11): the 3-round Lloyd build + the
-    // same probe/re-rank. Training cost = rounds × (one broadcast
-    // assignment pass + one slim per-dimension mean aggregate) over
-    // the corpus — the build-time step a real index amortizes across
-    // query batches; search cost matches knn_ivf.
+    // same probe/re-rank. Training cost = rounds × (one corpus scan
+    // with map-side vec_nearest assignment + one slim (cid, i) mean
+    // aggregate), the centroid table held on the driver between rounds
+    // — the build-time step a real index amortizes across query
+    // batches; search cost matches knn_ivf.
     time(s"knn_ivf_kmeans(nlist=$nlist)")(force(
       Similarity.ivfTopKTrained(emb, queries, "vec_id", "embedding", 10,
         nlist = nlist, nprobe = math.max(1, nlist / 16), rounds = 3)))
