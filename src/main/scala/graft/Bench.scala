@@ -1,20 +1,7 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
+import GraftSession.force
 object Bench {
-
-  /** Force full evaluation of every output column, not just row counts.
-    * A bare count() lets Catalyst prune the projection, so select-only
-    * queries (str_*, cast_*, proj_select, …) would time the parquet
-    * scan instead of their expressions. Reducing a hash of the whole
-    * row defeats pruning while still returning one tiny driver value.
-    * bit_xor, not sum: ANSI mode makes sum() of random 64-bit hashes
-    * overflow almost surely. Falls back to count() for output types
-    * xxhash64 can't consume. */
-  private def force(df: DataFrame): Unit =
-    try df.select(xxhash64(struct(col("*"))).as("h"))
-      .agg(expr("bit_xor(h)")).collect()
-    catch { case _: Throwable => df.count() }
 
   /** 1-minute load average — recorded in the bench line so a measure
     * taken on a contended box is visible in the artifact itself
@@ -24,7 +11,7 @@ object Bench {
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.getLines().next().split(" ").head.toDouble finally src.close()
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
   /** Other live java processes (excluding this JVM). On a quiet
     * sbt-launched run this is 1 (the sbt parent); anything more means
@@ -38,7 +25,7 @@ object Bench {
           .map[Boolean](c => c.endsWith("/java") || c == "java")
           .orElse(false)
       }
-    } catch { case _: Throwable => -1 }
+    } catch { case NonFatal(_) => -1 }
 
   /** Page-cache size (GiB) from /proc/meminfo. Run-to-run variance
     * traced to this in round 7: a dropped cache (observed 2 GiB on a
@@ -52,7 +39,7 @@ object Bench {
         case l if l.startsWith("Cached:") =>
           math.round(l.split("\\s+")(1).toDouble / 1024 / 1024 * 10) / 10.0
       }.getOrElse(-1.0) finally src.close()
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
   /** Total sectors read across block devices (/proc/diskstats field 6)
     * — the delta over the run separates "slow because recomputed" from
@@ -67,40 +54,14 @@ object Bench {
             !f(2).matches(".*\\d+p\\d+") && !f(2).matches("[a-z]+d[a-z]\\d+"))
           f(5).toLong else 0L
       }.sum finally src.close()
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val loadStart = load1()
     val cachedStart = cachedGb()
     val sectorsStart = sectorsRead()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Shuffle/spill files on scratch (tmpfs when available): measure
-      // the engine, not the box's disk queue (BENCH_r03 contention).
-      .config("spark.local.dir", Scratch.dir("spark-local"))
-      // Streaming: the AvailableNow replays are one-shot — retaining the
-      // default 100 batches of checkpoint/state history is pure I/O.
-      .config("spark.sql.streaming.minBatchesToRetain", "1")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-      // Periodic driver GC (Spark's own ContextCleaner knob, default
-      // 30min — longer than the whole bench): the suite's iterative
-      // operators localCheckpoint thousands of RDDs across 414×(3+1)
-      // query runs, and with an 8g driver heap nothing ever triggers
-      // the full GC that lets ContextCleaner drop their block-manager
-      // entries — measured as a monotone late-suite drift (the
-      // alphabetically-last stream_* family read uniformly +0.3-3 s
-      // in affected runs while the same queries probe fast in a fresh
-      // JVM). 60s keeps the block registry bounded for the whole run.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Batch queries first, true-streaming runs last: streaming leaves
     // state-store maintenance threads behind that would otherwise bleed
     // into unrelated batch timings mid-run.
@@ -116,7 +77,7 @@ object Bench {
     // shapes, so the codegen cache and JIT profiles carry over.
     val warmDir = "/root/testdata/sf0.001"
     (batch ++ streaming).foreach { case (_, fn) =>
-      try force(fn(spark, warmDir)) catch { case _: Throwable => () }
+      try force(fn(spark, warmDir)) catch { case NonFatal(_) => () }
     }
     // Pre-stage the target-SF format round-trips (fingerprint-keyed,
     // written once per fixture and reused): the timed scan_* queries
@@ -124,7 +85,7 @@ object Bench {
     Seq("scan_csv", "scan_jsonl", "scan_orc", "join_bucketed",
         "sink_csv", "sink_jsonl").foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>
-        try force(fn(spark, sfDir)) catch { case _: Throwable => () }
+        try force(fn(spark, sfDir)) catch { case NonFatal(_) => () }
       }
     }
     spark.catalog.clearCache()
@@ -147,7 +108,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { force(fn(spark, sfDir)); true }
-          catch { case _: Throwable => false }
+          catch { case NonFatal(_) => false }
         val dt = (System.nanoTime() - t0) / 1e9
         // Isolate queries: drop any cache a query built internally so a
         // lingering block doesn't distort later timings.
@@ -208,7 +169,7 @@ object Bench {
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LAST.json"),
       s"""{"contract":$contract,"detail":${fmt(results.sortBy(_._2))},"runs":$runsJson}""")
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
     spark.stop()
   }
 }

@@ -47,6 +47,10 @@ object Similarity {
     * Ranking happens on the 6-digit-rounded similarity with the
     * neighbour id as tiebreak, so results are reproducible across
     * engines that disagree in the last float ulp.
+    *
+    * A zero vector or one whose length differs from the other side's
+    * scores null against it (spec-pinned). Null-scored neighbours still
+    * fill the k slots, after every scored one, by ascending id.
     */
   def cosineTopK(
       corpus: DataFrame, queries: DataFrame,
@@ -104,7 +108,7 @@ object Similarity {
     * raise nprobe when recall matters more than latency.
     *
     * DEFAULT nprobe ≈ nlist/16 (6% probe fraction — ScaleBench's
-    * standing rule), now with measured evidence (graft.tools.IvfRecall,
+    * standing rule), now with measured evidence (ScaleBench `ivf_recall`,
     * ×100 corpus: 200k × dim-64, nlist=447, 1000 queries vs brute-force
     * ground truth): recall@10 = 0.9882 at nprobe=9 (2%), 0.9998 at
     * nprobe=27 (6%), 1.0000 at nprobe=81 (18%), with cost linear in
@@ -112,7 +116,7 @@ object Similarity {
     * at the knee: ~4-nines recall for ~1/3 the nprobe=81 re-rank
     * stream. Caveat: the replica-derived ×100 corpus clusters tightly
     * (a vector's true neighbours share its centroid), so treat these
-    * as upper bounds and re-run IvfRecall when embedding geometry
+    * as upper bounds and re-run `ivf_recall` when embedding geometry
     * changes materially.
     */
   def ivfTopK(
@@ -369,7 +373,12 @@ object Similarity {
     * query) constant as the corpus grows: ~1 M vectors per 256-row
     * bucket wants 12 bits, 1 B wants ~22. Recall at fixed bits falls
     * as buckets shrink; compensate with banding (neardupPairs-style
-    * multi-band OR multi-probe neighbors at hamming distance 1). */
+    * multi-band OR multi-probe neighbors at hamming distance 1).
+    *
+    * Every row it returns carries cosineTopK's exact score for that
+    * pair, so zero and mismatched-length vectors score null here too
+    * (spec-pinned); which of them share a bucket is up to the
+    * projection. */
   def lshTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, bits: Int = 12): DataFrame = {

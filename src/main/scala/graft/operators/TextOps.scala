@@ -204,39 +204,6 @@ object TextOps {
       .filter(greatest(col("c_ab"), col("c_ba")) >= threshold)
   }
 
-  /** One xxhash64 per shingle — the only pass that touches strings. */
-  def shingleHashes(sh: Column): Column = transform(sh, s2 => xxhash64(s2))
-
-  /** MinHash signature from pre-hashed shingles (the scale path): the
-    * i-th hash function re-hashes the 8-byte value XOR a per-function
-    * salt — no string work, no overflow (ANSI-safe), one cheap long
-    * hash per (function, shingle). Callers materialize shingleHashes
-    * as a column first so strings are hashed exactly once. */
-  def minhashSigFromHashes(hs: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), i =>
-      array_min(transform(hs, h =>
-        xxhash64(h.bitwiseXOR(i * lit(0x9E3779B97F4A7CL))))))
-
-  /** MinHash signature straight from shingles (convenience; prefer the
-    * two-step form in pipelines so the string hashing isn't re-inlined
-    * into every downstream expression). */
-  def minhashSigFast(sh: Column, numHashes: Int): Column =
-    minhashSigFromHashes(shingleHashes(sh), numHashes)
-
-  /** LSH banding: split the `numHashes`-wide signature into `bands`
-    * equal bands and hash each band to a bucket id. Returns
-    * array<struct<band:int, bucket:bigint>> ready to explode. */
-  def lshBands(sig: Column, numHashes: Int, bands: Int): Column = {
-    val rows = numHashes / bands
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(
-        b.cast("int").as("band"),
-        xxhash64(concat_ws(",",
-          transform(sequence(lit(0), lit(rows - 1)),
-            r => element_at(sig, b * rows + r + 1).cast("string"))))
-          .as("bucket")))
-  }
-
   /** 16-bit SimHash over whitespace tokens: bit b is the sign of
     * Σ_tokens (+1 / −1 by bit b of xxhash64(token)). */
   def simhash16(text: Column): Column = {
@@ -382,6 +349,11 @@ object TextOps {
     * and leaves no lingering memory pressure. The self-join's sides are
     * identical subtrees, so ReuseExchange computes the banding shuffle
     * once.
+    *
+    * Edge inputs (spec-pinned): null text, "" and texts of fewer than
+    * three words have no shingles, so they are never in a pair.
+    * Repeated tokens collapse to their distinct shingles, so two
+    * "a a a a a a" docs pair at jaccard 1.0.
     */
   def minhashNearDupPairs(
       df: DataFrame, idCol: String, textCol: String,
@@ -419,7 +391,9 @@ object TextOps {
   }
 
   /** MinHash dedup: drop every doc that has a verified near-dup with a
-    * smaller id (the canonical survivor rule). */
+    * smaller id (the canonical survivor rule). A doc that cannot pair
+    * (null, "" or under three words; see minhashNearDupPairs) always
+    * survives. */
   def minhashDedup(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5): DataFrame = {
     val losers = minhashNearDupPairs(df, idCol, textCol, threshold = threshold)
@@ -440,7 +414,11 @@ object TextOps {
     * all-pairs; hot band-values (boilerplate clusters) are capped like
     * the MinHash buckets so one degenerate value can't quadratically
     * explode a reducer at corpus scale. Verification is a single
-    * codegen'd bit_count(xor) per candidate pair. */
+    * codegen'd bit_count(xor) per candidate pair.
+    *
+    * Edge inputs (spec-pinned): null text has a null `sh64`, is never
+    * banded and always survives; "" and short texts get a fingerprint
+    * like any other doc. */
   def simhashDedup(df: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3, bands: Int = 4, maxBucket: Int = 1000): DataFrame = {
     import org.apache.spark.sql.expressions.Window

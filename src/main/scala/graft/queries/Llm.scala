@@ -1902,7 +1902,7 @@ object Llm extends QueryModule {
     // sides and intersects them. Scale shape: the intersection join is
     // over two |Q|·k result sets (tiny); the real cost is the exact
     // ground-truth side, which a deployment runs over a SAMPLED query
-    // set by construction (graft.tools.IvfRecall is the ×100 form:
+    // set by construction (ScaleBench `ivf_recall` is the ×100 form:
     // 1000 sampled queries against a 200k corpus).
     QueryDef(
       "llm_knn_recall_eval",

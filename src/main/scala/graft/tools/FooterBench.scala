@@ -1,11 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object FooterBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     val tables = Seq("lineitem", "orders", "events", "documents", "embeddings")
     // warm
     tables.foreach(t => spark.read.parquet(s"/root/testdata/sf0.1/$t.parquet").schema)

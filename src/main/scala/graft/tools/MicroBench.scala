@@ -1,16 +1,11 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.TextOps
 import graft.sources.Catalog
 
 object MicroBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
     val df = Catalog.table(spark, "/root/testdata/sf0.1", "documents")
     def time[T](label: String)(f: => T): Unit = {
       (1 to 2).foreach { i =>

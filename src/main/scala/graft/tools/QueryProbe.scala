@@ -1,18 +1,27 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import scala.util.control.NonFatal
 
+import graft.GraftSession
+import graft.GraftSession.force
+import graft.plans.PlanAudit
+
 /** Times declared queries at a given SF dir — dev utility for iterating
-  * on query plans without a full Bench run. Mirrors Bench's session
-  * config and force() methodology (xxhash64-struct bit_xor collect, so
-  * Catalyst cannot prune the projection) exactly.
+  * on query plans without a full Bench run. Uses Bench's session and
+  * force (graft.GraftSession), so a probe times the engine Bench times.
   *
   * Usage: runMain graft.tools.QueryProbe [sfDir] name [name ...]
-  * Env:   QP_RUNS=k       runs per query (default 3)
+  * Env:   QP_RUNS=k       runs per query (default 3; 0 = plan only)
   *        QP_PLANS=dir    also write explain("formatted") to dir/<name>.txt
+  *                        and the PlanAudit findings to dir/<name>.audit.txt,
+  *                        print them, and end with `errors: N`
   *        QP_WARM=1       warm the whole suite at sf0.001 first (Bench-like)
+  *        QP_JOBS=1       print each Spark job's wall clock, and each
+  *                        streaming micro-batch's durationMs breakdown
+  *        QP_CONF=k=v,..  extra session confs for A/B experiments
   */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
@@ -20,7 +29,7 @@ object QueryProbe {
     // Fail fast on the pre-r18 arg order ([name] [sfDir] [runs]): a
     // query name in the dir slot would silently probe the default
     // query against a nonexistent data dir.
-    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir))) {
+    if (!Files.isDirectory(Paths.get(dir))) {
       System.err.println(
         s"QueryProbe: '$dir' is not a directory.\n" +
           "Usage: runMain graft.tools.QueryProbe [sfDir] name [name ...]")
@@ -29,51 +38,36 @@ object QueryProbe {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("llm_decontaminate")
     val runs = sys.env.getOrElse("QP_RUNS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", graft.Scratch.dir("spark-local"))
-      .config("spark.sql.streaming.minBatchesToRetain", "1")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // QP_CONF=k=v,k=v: extra session confs for A/B experiments
+    val spark = GraftSession()
     sys.env.get("QP_CONF").foreach(_.split(',').foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)
     })
-    // QP_JOBS=1: per-job wall clock + stage/task counts via listener
     if (sys.env.contains("QP_JOBS")) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            t0.put(js.jobId, System.nanoTime())
-          }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val dt = (System.nanoTime() -
-              t0.getOrDefault(je.jobId, System.nanoTime())) / 1e9
-            if (dt > 0.02)
-              println(f"    [job ${je.jobId}%4d] ${dt}%6.3f s")
-          }
-        })
+      spark.sparkContext.addSparkListener(new SparkListener {
+        private val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          t0.put(js.jobId, System.nanoTime())
+        override def onJobEnd(je: SparkListenerJobEnd): Unit = {
+          val dt = (System.nanoTime() -
+            t0.getOrDefault(je.jobId, System.nanoTime())) / 1e9
+          if (dt > 0.02) println(f"    [job ${je.jobId}%4d] ${dt}%6.3f s")
+        }
+      })
+      spark.streams.addListener(new StreamingQueryListener {
+        import StreamingQueryListener._
+        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryProgress(e: QueryProgressEvent): Unit = {
+          val p = e.progress
+          println(s"    [batch ${p.batchId}] rows=${p.numInputRows} " +
+            s"durationMs=${p.durationMs}")
+          p.stateOperators.foreach(so => println(
+            s"      state ${so.operatorName}: rows=${so.numRowsTotal} " +
+              s"mem=${so.memoryUsedBytes} commitMs=${so.commitTimeMs}"))
+        }
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      })
     }
-    // Fallback narrowed to AnalysisException (the hash-unsupported-type
-    // case, e.g. a MapType column): a genuinely failing query must
-    // propagate, not get silently re-timed as a count() — probe numbers
-    // would otherwise diverge from Bench, which records errors.
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      try df.select(xxhash64(struct(col("*"))).as("h"))
-        .agg(expr("bit_xor(h)")).collect()
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => df.count()
-      }
     if (sys.env.contains("QP_WARM")) {
       val warmDir = "/root/testdata/sf0.001"
       graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
@@ -82,16 +76,28 @@ object QueryProbe {
       spark.catalog.clearCache()
     }
     val planDir = sys.env.get("QP_PLANS")
+    var auditErrors = 0
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)
       planDir.foreach { pd =>
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(pd))
-        val df = fn(spark, dir)
-        // queryExecution.explainString matches df.explain("formatted")
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(pd, s"$n.txt"), txt)
+        Files.createDirectories(Paths.get(pd))
+        // A query that fails to build is an audit error, as in Verify.
+        val findings =
+          try {
+            val df = fn(spark, dir)
+            // queryExecution.explainString matches df.explain("formatted")
+            Files.writeString(Paths.get(pd, s"$n.txt"), df.queryExecution
+              .explainString(org.apache.spark.sql.execution.FormattedMode))
+            PlanAudit.audit(df)
+          } catch { case NonFatal(e) =>
+            Seq(PlanAudit.Finding("error", "audit-failed",
+              String.valueOf(e.getMessage).take(200)))
+          }
+        val lines = findings.map(f => s"$n ${f.render}")
+        lines.foreach(println)
+        Files.writeString(Paths.get(pd, s"$n.audit.txt"),
+          lines.map(_ + "\n").mkString)
+        auditErrors += findings.count(_.severity == "error")
       }
       val times = (1 to runs).map { i =>
         val t0 = System.nanoTime()
@@ -101,8 +107,9 @@ object QueryProbe {
         println(f"$n run$i: $dt%.3f s")
         dt
       }
-      println(f"$n min: ${times.min}%.3f s")
+      if (times.nonEmpty) println(f"$n min: ${times.min}%.3f s")
     }
+    if (planDir.isDefined) println(s"errors: $auditErrors")
     spark.stop()
   }
 }

@@ -1,10 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.atomic.LongAdder
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
+import graft.GraftSession
+import graft.GraftSession.force
 import graft.operators.{Components, Similarity, TextOps}
 import graft.sources.Catalog
+import graft.streaming.Streams
 
 /** Local 100×-scale spot-bench of the dedup/ANN family — the 100 TB
   * posture's measurable evidence (VERDICT r4 stretch item).
@@ -19,29 +24,16 @@ import graft.sources.Catalog
   *
   * Times the SCALE-PATH (xxhash64 / banded / bucketed) operators only:
   * exact dedup, MinHash dedup, SimHash dedup, dedup-group components,
-  * SRP-LSH kNN, IVF kNN. Run:
-  *   SCALE_MULT=100 sbt "runMain graft.tools.ScaleBench"
+  * SRP-LSH kNN, IVF kNN and its recall curve, the streaming operators.
+  * Each op is forced with graft.GraftSession.force. Optional args keep
+  * only the ops whose name contains one of them. Run:
+  *   SCALE_MULT=100 sbt "runMain graft.tools.ScaleBench [op ...]"
   */
 object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val mult = sys.env.getOrElse("SCALE_MULT", "100").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_LOCAL_DIRS (comma-separated) spreads shuffle spill
-    // across multiple devices — the local.dir-lists-every-NVMe shape a
-    // real cluster node runs; the x1000 exact-verify shuffles (~80 GB)
-    // exceed any single device this box has.
-    val spill = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIRS",
-      graft.Scratch.dir("spark-local"))
-    spill.split(',').foreach(d =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", spill)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val base = "/root/testdata/sf0.1"
     val out = s"/tmp/graft-scale-x$mult"
 
@@ -93,7 +85,6 @@ object ScaleBench {
     val nDocs = docs.count(); val nEmb = emb.count()
     println(s"corpus: $nDocs docs, $nEmb embeddings (x$mult)")
 
-    def force(df: DataFrame): Long = df.count()
     // optional op-name substring filter: `runMain ... ScaleBench lsh ivf`
     val only = args.toSeq
     def time(label: String)(f: => Long): Unit =
@@ -796,7 +787,7 @@ object ScaleBench {
     // hash-cut keep test — the whole corpus is touched once, nothing
     // else scales with it. (stream_audio_ingest's per-row decode cost
     // is the flac_decode row; the stateless-Append machinery is the
-    // StreamScaleProbe evidence.)
+    // stream_* rows below.)
     if (only.isEmpty || only.exists("mix_temperature".contains)) {
       time("mix_temperature_apply")(force {
         val d = docs.select(col("doc_id"), col("source"),
@@ -1072,6 +1063,117 @@ object ScaleBench {
       Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding", k = 10,
         shortlist = 50, centroidEvery = ivfpqEvery,
         nprobe = math.max(1, nlist / 16))))
+    // IVF recall-vs-cost curve, the evidence behind ivfTopK's nprobe
+    // default: one knn query in ten against the exact brute-force
+    // cosineTopK (same 6-digit rounding + id tiebreak as ivfTopK, so
+    // ranking ties cannot pollute recall); recall@10 = |IVF ∩ GT| / |GT|.
+    // The trained row runs Lloyd-trained centroids at the middle nprobe.
+    if (only.isEmpty || only.exists("ivf_recall".contains)) {
+      val rq = queries.filter(col("vec_id") % 10 === 0)
+      val gt = Similarity.cosineTopK(emb, rq, "vec_id", "embedding", 10)
+        .select("qid", "nid").cache()
+      val t0 = System.nanoTime()
+      val nGt = gt.count()
+      println(f"""{"op":"ivf_recall_brute","sec":${(System.nanoTime() - t0) / 1e9}%.2f,"rows":$nGt}""")
+      def recall(label: String, np: Int)(ivf: => DataFrame): Unit = {
+        val t0 = System.nanoTime()
+        val hits = ivf.select("qid", "nid").join(gt, Seq("qid", "nid")).count()
+        println(f"""{"op":"$label","nlist":$nlist,"nprobe":$np,""" +
+          f""""recall":${hits.toDouble / nGt}%.4f,""" +
+          f""""sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
+      }
+      Seq(9, 27, 81).foreach(np => recall("ivf_recall", np)(
+        Similarity.ivfTopK(emb, rq, "vec_id", "embedding", 10, nlist, np)))
+      recall("ivf_recall_trained", 27)(Similarity.ivfTopKTrained(
+        emb, rq, "vec_id", "embedding", 10, nlist, 27, rounds = 3))
+      gt.unpersist()
+    }
+    // Streaming at ×mult (SURVEY §2.9): events replicated ×mult over the
+    // same 30-day span — mult× event density and user cardinality, the
+    // shape of more traffic, not a longer history — and replayed as a
+    // micro-batched file source (maxFilesPerTrigger=2 over 16 staged
+    // files), so watermarks advance and state is evicted across batches.
+    // Rows are counted in a foreachBatch sink; a memory-sink drain would
+    // be driver-bound at this size. The claim: state stays bounded by
+    // the 2 h watermark while wall time grows ~linearly in events.
+    lazy val eventsDir = {
+      val d = s"$out/events-stream.parquet"
+      if (!new java.io.File(s"$d/_SUCCESS").exists()) {
+        Catalog.table(spark, base, "events")
+          .withColumn("r", explode(expr(s"sequence(0L, ${mult - 1}L)")))
+          .select((col("event_id") * mult + col("r")).as("event_id"), col("ts"),
+            (col("user_id") + col("r") * lit(10000000L)).as("user_id"),
+            col("event_type"), col("value"), col("props"))
+          // range-partition on ts: the part-file order IS event-time
+          // order, so late drops are the exception, not an artifact of
+          // random file order
+          .repartitionByRange(16, col("ts"))
+          .sortWithinPartitions("ts")
+          .write.mode("overwrite").parquet(d)
+        // FileStreamSource replays in MTIME order and parallel part-file
+        // writes land with effectively random mtimes: restamp them in
+        // path (= ts-range) order
+        new java.io.File(d).listFiles().filter(_.getName.startsWith("part-"))
+          .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
+            f.setLastModified(1700000000000L + i * 60000L) }
+      }
+      d
+    }
+    def events(): DataFrame = Catalog.normalizeTs(
+      spark.readStream.schema(spark.read.parquet(eventsDir).schema)
+        .option("maxFilesPerTrigger", "2").parquet(eventsDir))
+    def counted(df: DataFrame, mode: OutputMode): Long = {
+      val ckpt = graft.Scratch.dir("ckpt", s"scale-${System.nanoTime()}")
+      val rows = new LongAdder
+      val q = df.writeStream.outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, _: Long) => rows.add(b.count()) }
+        .start()
+      q.awaitTermination(); q.stop()
+      Streams.deleteRecursively(ckpt)
+      rows.sum()
+    }
+    time("stream_tumbling_watermark")(counted(
+      Streams.tumblingWithWatermark(events()), OutputMode.Append()))
+    time("stream_dedup_watermark")(counted(
+      Streams.dedupWithinWatermark(events()), OutputMode.Append()))
+    time("stream_stateful_user")(counted(
+      Streams.runningUserState(events()), OutputMode.Update()))
+    // Gap-based session windows: the one §2.9 state shape whose growth
+    // is density-sensitive by nature (each open session holds a range
+    // per user until watermark + gap close it). The claim: state stays
+    // bounded by active users × open sessions, not by event count.
+    time("stream_session_window")(counted(
+      events().withWatermark("ts", "2 hours")
+        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("user_id"),
+          col("session_window.start").as("session_start"), col("n_events")),
+      OutputMode.Append()))
+    // Interval joins, inner and outer: outer state is the same
+    // O(active interval) as the inner form (the null-extensions ride
+    // watermark eviction), so throughput should stay flat against the
+    // inner join, with emitted rows linear in events.
+    def side(kind: String, id: String, ts: String, user: String): DataFrame =
+      events().filter(col("event_type") === kind)
+        .select(col("user_id").as(user), col("ts").as(ts),
+          col("event_id").as(id))
+        .withWatermark(ts, "2 hours")
+    def interval(how: String): DataFrame = {
+      val v = side("view", "view_id", "view_ts", "user_id")
+      val c = side("click", "click_id", "click_ts", "c_user")
+      v.join(c, v("user_id") === c("c_user") &&
+          c("click_ts") >= v("view_ts") - expr("INTERVAL 2 HOURS") &&
+          c("click_ts") <= v("view_ts"), how)
+        .select(coalesce(col("user_id"), col("c_user")).as("user_id"),
+          col("view_id"), col("click_id"))
+    }
+    Seq("inner" -> "stream_join", "left_outer" -> "stream_join_outer",
+        "full_outer" -> "stream_join_full",
+        "right_outer" -> "stream_join_right").foreach { case (how, label) =>
+      time(label)(counted(interval(how), OutputMode.Append()))
+    }
     spark.stop()
   }
 }

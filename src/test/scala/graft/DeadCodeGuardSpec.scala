@@ -76,4 +76,26 @@ class DeadCodeGuardSpec extends AnyFunSuite {
         s"outside operators/): ${dead.mkString(", ")} — wire a declared " +
         "query + spec or delete the file from src/main")
   }
+
+  test("one session builder in src, and no catch of Throwable in src/main") {
+    def read(p: java.nio.file.Path) =
+      stripComments(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    // built from parts so this file's own source does not match
+    val builder = Seq("SparkSession", "builder").mkString(".")
+    val copies = (scalaFiles("src/main/scala") ++ scalaFiles("src/test/scala"))
+      .filter(p => p.getFileName.toString != "GraftSession.scala" &&
+        read(p).contains(builder))
+    assert(copies.isEmpty,
+      s"build the session with graft.GraftSession, not $builder: " +
+        copies.mkString(", "))
+    // a typed Throwable pattern, or an untyped catch-all case, swallows
+    // fatal errors too; program code catches NonFatal. Test code may
+    // still turn any throw of a fuzz trial into a named test failure.
+    val fatal =
+      """:\s*(java\.lang\.)?Throwable\s*=>|catch\s*\{\s*case\s+[a-z_]\w*\s*=>""".r
+    val swallowers = scalaFiles("src/main/scala")
+      .filter(p => fatal.findFirstIn(read(p)).isDefined)
+    assert(swallowers.isEmpty,
+      s"catch NonFatal, not every Throwable: ${swallowers.mkString(", ")}")
+  }
 }

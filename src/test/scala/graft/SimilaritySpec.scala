@@ -36,6 +36,27 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("zero and mismatched-length vectors score null and rank last") {
+    val emb = Seq((1L, Seq(1.0, 0.0, 0.0)), (2L, Seq(0.9, 0.1, 0.0)),
+      (3L, Seq(0.0, 1.0)), (4L, Seq(0.0, 0.0, 0.0)))
+      .toDF("vec_id", "embedding")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Int, Long, Option[Double])].collect().sortBy(r => (r._1, r._2)).toSeq
+    val exact = rows(Similarity.cosineTopK(emb, emb, "vec_id", "embedding", 3))
+    assert(exact.filter(_._1 == 1L) ==
+      Seq((1L, 1, 2L, Some(0.993884)), (1L, 2, 3L, None), (1L, 3, 4L, None)))
+    assert(exact.filter(_._1 == 3L) ==
+      Seq((3L, 1, 1L, None), (3L, 2, 2L, None), (3L, 3, 4L, None)))
+    assert(exact.filter(_._1 == 4L) ==
+      Seq((4L, 1, 1L, None), (4L, 2, 2L, None), (4L, 3, 3L, None)))
+    // lshTopK ranks a bucket's candidates with the same exact score
+    val approx = rows(Similarity.lshTopK(emb, emb, "vec_id", "embedding", 3,
+      bits = 4))
+    val exactScores = exact.map(r => (r._1, r._3, r._4)).toSet
+    assert(approx.contains((1L, 1, 2L, Some(0.993884))))
+    assert(approx.forall(r => exactScores((r._1, r._3, r._4))))
+  }
+
   test("lshTopK has reasonable recall vs brute force on fixture vectors") {
     val emb = Catalog.table(spark, sf0001, "embeddings")
     val q = emb.filter(col("vec_id") < 20)

@@ -408,6 +408,26 @@ class TextOpsSpec extends SparkSpec {
     assert((shDropped -- mhDropped).isEmpty)
   }
 
+  test("near-dup dedup edge inputs: null, empty, two words, repeated tokens") {
+    val fifty = (1 to 50).map(i => s"w$i").mkString(" ")
+    val df = Seq[(Long, String)]((1L, null), (2L, ""), (3L, "one two"),
+      (4L, "a a a a a a"), (5L, "a a a a a a"), (6L, fifty), (7L, fifty))
+      .toDF("doc_id", "text")
+    // fewer than three words: no shingles, never a pair; repeated
+    // tokens collapse to the one distinct shingle "a a a"
+    val pairs = TextOps.minhashNearDupPairs(df, "doc_id", "text")
+      .as[(Long, Long, Double)].collect().toSet
+    assert(pairs == Set((4L, 5L, 1.0), (6L, 7L, 1.0)))
+    val mhKept = TextOps.minhashDedup(df, "doc_id", "text")
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(mhKept == Seq(1L, 2L, 3L, 4L, 6L))
+    // null text: null fingerprint, never banded, always kept
+    val sh = TextOps.simhashDedup(df, "doc_id", "text")
+      .select("doc_id", "sh64").as[(Long, Option[Long])].collect().sortBy(_._1)
+    assert(sh.map(_._1).toSeq == Seq(1L, 2L, 3L, 4L, 6L))
+    assert(sh.head._2.isEmpty && sh.tail.forall(_._2.isDefined))
+  }
+
   test("jaccard of disjoint sets is 0, identical sets is 1") {
     val df = Seq((Seq("a", "b"), Seq("a", "b"), Seq("c", "d")))
       .toDF("x", "y", "z")
